@@ -108,60 +108,12 @@ object Bench {
         }
       }
     }
-    // shuffle/spill scratch on tmpfs when one is available: local-mode
-    // shuffle files otherwise land on disk, and the OS write-back of the
-    // heavy queries' shuffle output taxes LATER queries' timed regions —
-    // measured as 2-5x inflation of sub-second queries late in a
-    // 360-execution sequential session, collapsing back to baseline when
-    // scratch is memory-backed. A real cluster provisions executor local
-    // dirs on fast storage for exactly the same reason.
-    val localScratch = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_local"
-      else sys.props("java.io.tmpdir")
-    })
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", localScratch)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SPARK_GRAFT_AQE=false: experiment knob — AQE's nondeterministic
-      // stage numbering recompiles codegen units across reruns of multi-
-      // stage plans (measured as compile-churn on the incremental dedups)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // the local SFs are MBs, not TBs: AQE's default 64 MB advisory size
-      // would coalesce every exchange to ~1 partition and serialize the
-      // CPU-heavy stages; target small partitions so all cores stay busy
-      // (at production scale the 64 MB default is correct)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // static conf, default 100: one pass over the full query set generates
-      // several hundred distinct codegen units, so at 100 the LRU cycles and
-      // EVERY rerun of EVERY query pays full janino recompilation — measured
-      // as multi-second medians on the largest fused plans (flagship_volume,
-      // salted_join) despite optimal physical plans. A long-lived production
-      // driver serving a query mix wants the same headroom.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // the codegen stage ID in generated class names makes otherwise
-      // IDENTICAL code cache-miss whenever AQE renumbers stages — the
-      // multi-stage incremental dedups re-paid ~30 janino compiles per
-      // rerun. Without the ID the cache keys on the code itself.
-      .config("spark.sql.codegen.useIdInClassName",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_ID", "false"))
-      // session-clone classloader churn: every StreamingQuery start clones
-      // the session, and with artifact isolation on (Spark 4 default) the
-      // clone's fresh classloader misses the janino cache for every unit
-      // run on the stream thread — 13-30 recompiles (~0.5-1.2 s) per rerun
-      // on each stream_* query (see GraftSession.builder for the full
-      // story; graft.tools.CodegenCacheDiff is the instrument). This
-      // engine adds no session artifacts, so isolation is inert here and
-      // turning it off is semantics-identical.
-      .config("spark.sql.artifact.isolation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ISOLATION", "false"))
-      .config("spark.sql.warehouse.dir", sys.props("java.io.tmpdir") + "/graft_warehouse")
-      .config("spark.ui.enabled", "false")
+    // the public session (GraftSession.builder) plus deployment settings
+    // only: core count, and shuffle/spill scratch on tmpfs when one is
+    // available (see GraftSession.localScratchDir for the measured cost
+    // of disk-backed scratch)
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.local.dir", GraftSession.localScratchDir())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=q1,q2 restricts the set (local iteration); unset = all
@@ -274,22 +226,7 @@ object Bench {
       a.gcMs += gcMillis() - gc0
       a.leaked += leftovers.size
     }
-    // SPARK_GRAFT_ROTATE=1: instead of `runs` back-to-back runs per query,
-    // make `runs` full passes over the set with the start offset rotated
-    // ~1/runs of the list per pass — every query sees `runs` DIFFERENT
-    // predecessors, so a slowdown that travels with a neighbor (leaked
-    // blocks, page-cache eviction, machine load spikes) shows up as
-    // median-min spread instead of silently biasing one victim's median.
-    // Default off: back-to-back runs are the established timing baseline.
-    if (sys.env.get("SPARK_GRAFT_ROTATE").contains("1")) {
-      val step = math.max(1, names.size / math.max(1, runs))
-      for (p <- 0 until runs) {
-        val off = (p * step) % math.max(1, names.size)
-        (names.drop(off) ++ names.take(off)).foreach { case (n, fn) => runOnce(n, fn) }
-      }
-    } else {
-      names.foreach { case (n, fn) => (1 to runs).foreach(_ => runOnce(n, fn)) }
-    }
+    names.foreach { case (n, fn) => (1 to runs).foreach(_ => runOnce(n, fn)) }
     val results = names.map { case (name, _) =>
       val a = acc(name)
       val diag = Map("compiles" -> a.compiles, "genUnits" -> a.genUnits,
@@ -376,32 +313,24 @@ object Bench {
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] BENCH_LAST write failed: $e") }
-    // The FINAL stdout line carries the COMPLETE per-query maps (r15
-    // VERDICT ask: the driver's PERF per-query comparison must never again
-    // depend on BENCH_LAST.json surviving a later run's overwrite), laid
-    // out so BOTH consumers can read it:
-    //  - a parser of the full stdout line gets the contract keys (metric/
-    //    value/unit/queries/sf) PLUS the full queries_min map;
-    //  - the round artifact keeps only the LAST ~2000 chars of stdout (r5
-    //    and r6 both captured an unparseable mid-line tail), so the big
-    //    maps go FIRST and the human-readable headline + slowest-N
-    //    trailer goes LAST — the archived tail still ends with the
-    //    headline numbers, exactly as before this change.
-    // Additions-only: every key the compact line used to carry is still
-    // present; queries_min/queries are the same maps the first line and
-    // BENCH_LAST.json carry.
+    // The FINAL stdout line is the compact headline alone, at most
+    // ~1,300 chars: a consumer that keeps only the last ~2,000 chars of
+    // stdout (with sbt's "[success] Total time" line appended after it)
+    // must still find one whole JSON line starting {"metric":"total".
+    // The full per-query maps are on the COMPLETE line above and in
+    // `outFile`, which the headline names under "full".
     val slowestFirst = results.collect { case (k, Some((med, _)), _) => (k, med) }
       .sortBy(-_._2)
     val headBudget = 1300
     val head = new StringBuilder(
-      s""""metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","contended":$contended,"nQueries":${results.size},"failed":$failedJson,"full":"$outFile","slowest":{""")
+      s""""metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","cpus":$cpus,"contended":$contended,"nQueries":${results.size},"failed":$failedJson,"full":"$outFile","slowest":{""")
     var first = true
     for ((k, med) <- slowestFirst) {
       val entry = (if (first) "" else ",") + "\"" + k + "\":" + fmt(med)
       if (head.length + entry.length < headBudget) { head.append(entry); first = false }
     }
     head.append("}}")
-    System.out.println(s"""{"queries_min":$qsMin,"queries":$qs,""" + head.toString)
+    System.out.println("{" + head.toString)
     System.out.flush()
     spark.stop()
   }

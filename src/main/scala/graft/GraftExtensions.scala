@@ -13,7 +13,7 @@ import graft.functions._
   * functions, so `spark.sql` users get the same surface as the Column
   * API, plus the graft optimizer rules.
   *
-  * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Usage: `GraftSession.builder().withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.GraftExtensions`; on an existing
   * session, [[GraftExtensions.registerAll]].
   */

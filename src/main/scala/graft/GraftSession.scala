@@ -63,6 +63,24 @@ object GraftSession {
     s
   }
 
+  /** Shuffle/spill scratch directory for `spark.local.dir`:
+    * `SPARK_GRAFT_LOCAL_DIR` if set, else tmpfs (`/dev/shm`) when it is
+    * writable, else the JVM temp dir. Local-mode shuffle files otherwise
+    * land on disk, and the OS write-back of the heavy queries' shuffle
+    * output taxes LATER queries' timed regions — measured as 2-5x
+    * inflation of sub-second queries late in a 360-execution bench
+    * session, and a 17 GB spill to rotational /tmp (not the operator)
+    * once set fuzzy_join2's wall time in the Scale10 probe. A real cluster
+    * provisions executor local dirs on fast storage for the same reason.
+    * `spark.local.dir` is static conf, so callers pass this to the
+    * builder; [[builder]] itself does not apply it.
+    */
+  def localScratchDir(): String = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_local"
+    else sys.props("java.io.tmpdir")
+  })
+
   /** Normalize an event-time column to Spark's session-zoned
     * microsecond TimestampType regardless of how the parquet writer
     * encoded it:

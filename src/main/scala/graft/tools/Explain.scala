@@ -1,99 +1,112 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-import graft.GraftSession
-import graft.functions.TextFunctions
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftbridge.Bridge
 
-/** Ad-hoc plan/profiling harness: `runMain graft.tools.Explain <query>`
-  * prints the formatted plan and stage timings for one SparkEntry query,
-  * or runs named micro-profiles.
+import graft.{Caches, GraftSession, SparkEntry}
+
+/** Plan and profile of named [[graft.SparkEntry]] queries, in the
+  * session Bench times (the public builder, `SPARK_GRAFT_CPUS` cores,
+  * tmpfs scratch, the query's conf pins):
+  *
+  * `runMain graft.tools.Explain <query>[,<query>] [sfDir] [runs]`
+  *
+  * For each query it prints the formatted physical plan; per run, wall
+  * time, rows and the janino compile count (a cold first run followed by
+  * zeros means the codegen cache holds, the same nonzero count on every
+  * run is churn); and the completed stages with the most executor run
+  * time — task count (parallelism), input and shuffle bytes (data
+  * movement), run vs CPU seconds (the gap is GC and I/O wait) and disk
+  * spill (the memory cliff). `sfDir` defaults to `SPARK_GRAFT_SF_DIR`,
+  * `runs` to 2.
   */
 object Explain {
+
+  final case class Run(seconds: Double, rows: Long, compiles: Long)
+
+  final case class Stage(id: Int, tasks: Int, inputBytes: Long, shuffleReadBytes: Long,
+      shuffleWriteBytes: Long, runMs: Long, cpuNs: Long, spillBytes: Long)
+
+  final case class Profile(plan: String, runs: Seq[Run], stages: Seq[Stage])
+
+  /** Records every successfully completed stage; attached to the
+    * listener bus only while [[profile]] runs.
+    */
+  final class StageCollector extends SparkListener {
+    private val stages = new java.util.concurrent.ConcurrentLinkedQueue[Stage]()
+    def completed: Seq[Stage] = stages.asScala.toSeq
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+      val i = e.stageInfo
+      val m = i.taskMetrics
+      if (i.failureReason.isEmpty && m != null)
+        stages.add(Stage(i.stageId, i.numTasks, m.inputMetrics.bytesRead,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+          m.executorRunTime, m.executorCpuTime, m.diskBytesSpilled))
+    }
+  }
+
+  /** Run `query` `runs` times under its conf pins, releasing its caches
+    * after each run, and collect the plan, per-run figures and every
+    * stage those runs completed.
+    */
+  def profile(spark: SparkSession, query: String, sfDir: String, runs: Int): Profile = {
+    require(runs >= 1, s"runs must be >= 1, got $runs")
+    val fn = SparkEntry.queries.getOrElse(query,
+      throw new IllegalArgumentException(s"unknown query '$query'"))
+    val sc = spark.sparkContext
+    val collector = new StageCollector
+    sc.addSparkListener(collector)
+    try {
+      var plan = ""
+      val rs = GraftSession.withConfs(spark, SparkEntry.confPinsFor(spark, query, sfDir)) {
+        (1 to runs).map { i =>
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val t0 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          val rows = df.count()
+          val run = Run((System.nanoTime() - t0) / 1e9, rows,
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+          if (i == 1) plan = df.queryExecution.explainString(FormattedMode)
+          Caches.clear(spark, blocking = true)
+          run
+        }
+      }
+      // stage events arrive asynchronously: deliver them before reading
+      Bridge.drainListenerBus(sc)
+      Profile(plan, rs, collector.completed)
+    } finally sc.removeSparkListener(collector)
+  }
+
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", 32).getOrCreate()
+    val usage = "usage: Explain <query>[,<query>] [sfDir] [runs]  (sfDir defaults to $SPARK_GRAFT_SF_DIR)"
+    def fail(msg: String): Nothing = { System.err.println(msg); sys.exit(2) }
+    val names = args.headOption.map(_.split(",").toSeq).getOrElse(fail(usage))
+    val dir = args.lift(1).orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse(fail(usage))
+    val runs = args.lift(2).fold(2)(_.toInt)
+    names.filterNot(SparkEntry.queries.contains).foreach(q => fail(s"unknown query '$q'"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt)
+      .config("spark.local.dir", GraftSession.localScratchDir())
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // mirror Bench's small-SF AQE sizing so profiles match bench behavior
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    def time[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[time] $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s"); r
-    }
-
-    args.headOption match {
-      case Some("ngram_profile") =>
-        val docs = GraftSession.table(spark, dir, "documents")
-          .withColumn("_toks", TextFunctions.tokens(col("text")))
-        val sh = TextFunctions.shinglesOf(col("_toks"), 5)
-        time("tokens only")(docs.select(size(col("_toks"))).count())
-        time("shingles (two-phase)")(docs.select(explode(array_distinct(sh))).count())
-        val ex = docs.select(col("doc_id").as("_id"), array_distinct(sh).as("_shs"))
-          .withColumn("_n", size(col("_shs")))
-          .select(col("_id"), col("_n"), explode(col("_shs")).as("_sh"))
-        time("explode count")(ex.count())
-        val frequent = ex.groupBy(col("_sh")).agg(count(lit(1)).as("_df"))
-          .filter(col("_df") > 1000).select(col("_sh"))
-        val freqOk = ex.join(broadcast(frequent), Seq("_sh"), "left_anti")
-        time("anti-join persist")(freqOk.persist().count())
-        val a = freqOk.select(col("_sh"), col("_id").as("a"), col("_n").as("na"))
-        val b = freqOk.select(col("_sh"), col("_id").as("b"), col("_n").as("nb"))
-        val joined = a.join(b, "_sh").filter(col("a") < col("b"))
-          .groupBy("a", "b", "na", "nb").agg(count(lit(1)).as("common"))
-        time("self join + agg")(joined.count())
-      case Some("sinks_demo") =>
-        // pattern-named grouped transactional output + SQL function surface
-        import graft.sinks.{DirectOutput, OutputPattern}
-        val out = java.nio.file.Files.createTempDirectory("graft_demo").toString
-        DirectOutput.writeGrouped("demo", s"$out/_tx",
-          DirectOutput.Spec(GraftSession.table(spark, dir, "orders").repartition(2),
-            s"$out/orders", partitionBy = Seq("o_orderstatus")),
-          OutputPattern.parse("orders-{o_orderstatus}-{seq:%02d}-{date:yyyyMMdd}.parquet"))
-        new java.io.File(s"$out/orders").listFiles().filter(_.isDirectory).foreach { d =>
-          println(s"[demo] ${d.getName}: " + d.listFiles().map(_.getName)
-            .filter(_.endsWith(".parquet")).sorted.mkString(", "))
-        }
-        println(s"[demo] read-back rows: " + spark.read.parquet(s"$out/orders").count())
-        graft.functions.HashFunctions.register(spark)
-        spark.sql(
-          s"""SELECT doc_id, size(word_shingles(split(text, ' '), 5)) AS n_sh,
-             |       minhash_signature(word_shingles(split(text, ' '), 5))[0] AS mh0
-             |FROM parquet.`$dir/documents.parquet` LIMIT 3""".stripMargin).show(false)
-      case Some("codegen_check") =>
-        import graft.functions.{HashFunctions, TextFunctions}
-        val df = GraftSession.table(spark, dir, "documents")
-          .withColumn("_toks", TextFunctions.tokens(col("text")))
-          .select(HashFunctions.minhash_signature(TextFunctions.shinglesOf(col("_toks"), 3)).as("sig"),
-            HashFunctions.simhash64(col("_toks")).as("sh"))
-        val gen = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
-        println("[codegen] MinHash static call: " + gen.contains("MinHashSignature.compute"))
-        println("[codegen] SimHash static call: " + gen.contains("SimHash64.compute"))
-        println("[codegen] WordShingles static call: " + gen.contains("WordShingles.compute"))
-        println("[codegen] WSCG subtrees: " + gen.linesIterator.take(1).mkString)
-        time("run")(df.count())
-      case Some("conf_sweep") =>
-        // A/B a query under runtime-settable SQL confs:
-        //   Explain conf_sweep <query> key=v[,key=v...] — times base vs set
-        val q = args(1)
-        def run() = { val r = graft.SparkEntry.queries(q)(spark, dir).count()
-          graft.Caches.clear(spark); r }
-        time(s"$q warmup")(run())
-        time(s"$q base")(run())
-        for (kv <- args(2).split(",")) {
-          val Array(k, v) = kv.split("=", 2)
-          spark.conf.set(k, v)
-          time(s"$q $kv")(run())
-          spark.conf.unset(k)
-        }
-      case Some(q) =>
-        val df = graft.SparkEntry.queries(q)(spark, dir)
-        df.explain("formatted")
-        time(s"run $q")(df.count())
-        time(s"run $q again")(df.count())
-      case None => println("usage: Explain <queryName>|ngram_profile")
-    }
-    spark.stop()
+    try names.foreach { q =>
+      val p = profile(spark, q, dir, runs)
+      println(s"==== $q ====")
+      println(p.plan)
+      p.runs.zipWithIndex.foreach { case (r, i) =>
+        println(f"[explain] $q run ${i + 1}: time=${r.seconds}%.2fs rows=${r.rows} compiles=${r.compiles}")
+      }
+      println(f"[explain] ${"stage"}%6s ${"tasks"}%6s ${"in_MB"}%9s ${"shr_MB"}%9s ${"shw_MB"}%9s ${"run_s"}%8s ${"cpu_s"}%8s ${"spill_MB"}%9s")
+      p.stages.sortBy(-_.runMs).take(15).foreach { s =>
+        println(f"[explain] ${s.id}%6d ${s.tasks}%6d ${s.inputBytes / 1e6}%9.1f " +
+          f"${s.shuffleReadBytes / 1e6}%9.1f ${s.shuffleWriteBytes / 1e6}%9.1f " +
+          f"${s.runMs / 1e3}%8.2f ${s.cpuNs / 1e9}%8.2f ${s.spillBytes / 1e6}%9.1f")
+      }
+    } finally spark.stop()
   }
 }

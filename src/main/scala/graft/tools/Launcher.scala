@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch launcher — the engine's `spark-execute` contract (reference:
   * bootstrap/src/main/java/com/asakusafw/spark/bootstrap/SparkBootstrap
   * .java:37-120, Context.java:44-71), re-expressed Spark-first: instead
@@ -63,14 +61,10 @@ object Launcher {
       return
     }
     val c = parse(args.toList, Conf())
-    val builder = SparkSession.builder()
+    val builder = graft.GraftSession.builder(
+        sys.env.getOrElse("SPARK_GRAFT_MASTER", c.master),
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32").toInt)
       .appName(s"graft:${c.batchId}:${c.flowId}:${c.executionId}")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", c.master))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", sys.env.getOrElse("SPARK_GRAFT_UI", "false"))
     // batch arguments surface to operators as spark conf, the Spark-form
     // of the reference's ${var} batch-argument substitution

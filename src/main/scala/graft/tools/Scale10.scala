@@ -360,21 +360,12 @@ object Scale10 {
     }
   }
 
-  /** Probe session: GraftSession defaults plus the same scratch hygiene
-    * as Bench — shuffle/spill on tmpfs when one exists. Measured without
-    * it: fuzzy_join2's second-decade verification stage spilled 17 GB to
-    * rotational /tmp and the disk I/O, not the operator, set the wall
-    * time. A real cluster provisions executor local dirs on fast storage
-    * for exactly the same reason (spark.local.dir is static conf, so it
-    * must land in the builder, not on a live session).
+  /** Probe session: GraftSession defaults plus the same scratch dir as
+    * Bench ([[graft.GraftSession.localScratchDir]]).
     */
   private[tools] def probeSession(): SparkSession = {
-    val shm = new java.io.File("/dev/shm")
-    val scratch = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-      if (shm.isDirectory && shm.canWrite) "/dev/shm/graft_local"
-      else sys.props("java.io.tmpdir"))
     val s = graft.GraftSession.builder()
-      .config("spark.local.dir", scratch)
+      .config("spark.local.dir", graft.GraftSession.localScratchDir())
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -402,7 +393,7 @@ object Scale10 {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     def selected(qs: Seq[String]) = only.fold(qs)(f => qs.filter(f))
     val spark = probeSession()
-    // probe-session sizing (same reasoning as Bench's advisory override):
+    // probe-session sizing:
     // the local pseudo-SFs are MBs-to-GBs, not TBs, and the synthesized
     // tables are many SMALL part files — under the production defaults
     // (128 MB file splits, 64 MB AQE advisory) FilePartition packing

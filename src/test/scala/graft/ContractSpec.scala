@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Driver-contract guards: the correctness story is "every query has a
   * DuckDB oracle" (zero rows-only checks) — pin it structurally so a new
   * operator cannot land with a queries entry and no oracle (the driver
@@ -24,6 +26,25 @@ class ContractSpec extends SparkSpec {
     val q = SparkEntry.queries.keySet
     for (name <- SparkEntry.confPins.keys)
       assert(q.contains(name), s"confPins entry for unknown query: '$name'")
+  }
+
+  test("GraftSession.builder is the only code that defines a session") {
+    // every main adds deployment settings on top of GraftSession.builder;
+    // a second SparkSession.builder() call is a session whose confs drift
+    val src = new java.io.File("src")
+    assert(src.isDirectory, s"run from the project root (no src/ under ${src.getAbsolutePath})")
+    def scalaFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(scalaFiles)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    // a call in code, not in a comment line or a string literal
+    val call = """(?<!")\bSparkSession\s*\.\s*builder\b""".r
+    val calls = for {
+      f <- scalaFiles(src) if f.getName != "GraftSession.scala"
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      code = line.trim if !code.startsWith("*") && !code.startsWith("//")
+      if call.findFirstIn(code).isDefined
+    } yield s"${f.getPath}:${n + 1}"
+    assert(calls.isEmpty, s"SparkSession.builder() outside GraftSession.scala: ${calls.mkString(", ")}")
   }
 
   test("no duplicate query names across the query modules") {
